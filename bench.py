@@ -515,8 +515,6 @@ def multi_collection_lag_bench(
             pipe = CDCStreamPipeline(
                 spark, _lake_dir(c), trigger_seconds=trigger_seconds
             )
-            # in-batch router appends collections from worker threads
-            pipe.ingestor.collection_parallelism = collections
             pipes.append(pipe)
         # start every pipeline BEFORE any producer: streaming queries
         # initialize sequentially (seconds), and events produced into

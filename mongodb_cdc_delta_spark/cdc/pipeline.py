@@ -567,7 +567,6 @@ class CDCIngestor:
         materialize_current: bool = False,
         key_col: str = "_id",
         control_plane=None,
-        collection_parallelism: int = 1,
         dlq_max_rows_per_batch: int = 10_000,
         coalesce_commits: bool = True,
     ):
@@ -600,10 +599,6 @@ class CDCIngestor:
         self.circuit_breaker = circuit_breaker
         #: reference dlq_writer rate limit analogue (10k/min → per-batch)
         self.dlq_max_rows_per_batch = dlq_max_rows_per_batch
-        #: >1 routes collections to driver worker threads — each append is
-        #: an independent Spark job on its own table (the reference's
-        #: per-collection batch_processor threads, B2); 1 = serial
-        self.collection_parallelism = collection_parallelism
         #: optional ControlPlane: each ingest batch writes ONE audit entry
         #: (per-collection row/dlq stats as JSON details) — the reference
         #: audits every management op (api/src/routers/admin.py:148-185);
@@ -776,57 +771,9 @@ class CDCIngestor:
             n_clean_by_key = {
                 (r["db"], r["collection"]): r["n_clean"] for r in inferred
             }
-            items = sorted(schemas.items())
-            use_grouped = (
-                self.coalesce_commits
-                and batch_id is not None
-                and self.mode != MergeMode.LOCKED
-                and not self.materialize_current
-                and len(items) > 1
+            results, writes = self._plan_writes(
+                clean, sorted(schemas.items()), batch_id, n_clean_by_key
             )
-            if use_grouped:
-                results = self._ingest_grouped(
-                    clean, items, batch_id, n_clean_by_key
-                )
-            elif self.collection_parallelism > 1 and len(items) > 1:
-                # per-collection worker threads (reference batch_processor's
-                # per-collection threading, B2): each collection's append is
-                # an independent Spark job on its own table, so jobs run
-                # concurrently from driver threads; results merge after.
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(
-                    max_workers=self.collection_parallelism
-                ) as pool:
-                    results = list(
-                        pool.map(
-                            lambda kv: self._ingest_collection(
-                                clean,
-                                kv[0],
-                                kv[1],
-                                batch_id,
-                                n_rows_hint=n_clean_by_key.get(kv[0]),
-                            ),
-                            items,
-                        )
-                    )
-            else:
-                results = [
-                    self._ingest_collection(
-                        clean,
-                        key,
-                        sch,
-                        batch_id,
-                        n_rows_hint=n_clean_by_key.get(key),
-                    )
-                    for key, sch in items
-                ]
-            for table_name, res, evolved, drift_rows in results:
-                stats.collections[table_name] = res
-                if evolved:
-                    stats.schema_evolutions.append(table_name)
-                if drift_rows:
-                    stats.type_drift_rows[table_name] = drift_rows
             stats.dlq_rows = n_dlq
             if n_dlq:
                 # rate guard (reference dlq_writer.py:121-332 limits DLQ
@@ -842,9 +789,22 @@ class CDCIngestor:
                         .limit(self.dlq_max_rows_per_batch)
                     )
                 txn = (dlq_app_id, batch_id) if batch_id is not None else None
-                self._guarded_append(
-                    self.table("_dlq"), dlq, partition_by=[], txn=txn
-                )
+
+                def write_dlq():
+                    self._guarded_append(
+                        self.table("_dlq"), dlq, partition_by=[], txn=txn
+                    )
+                    return []
+
+                writes.append(write_dlq)
+            for out in self._run_concurrently(writes):
+                results.extend(out)
+            for table_name, res, evolved, drift_rows in results:
+                stats.collections[table_name] = res
+                if evolved:
+                    stats.schema_evolutions.append(table_name)
+                if drift_rows:
+                    stats.type_drift_rows[table_name] = drift_rows
         finally:
             parsed.unpersist()
         if self.control_plane is not None:
@@ -1034,32 +994,70 @@ class CDCIngestor:
             except OSError:
                 pass
 
-    def _ingest_grouped(
+    def _run_concurrently(self, writes: list) -> list:
+        """Run one batch's mutually independent table writes from driver
+        threads and return their results in submission order.
+
+        Every write is its own Spark job on its own table (or its own
+        grouped stage dir + uuid-named manifest), so the jobs only share
+        the persisted parse; run one after another, each pays the
+        driver's per-job round trip in series. The width is the number
+        of writes, capped at the context's default parallelism. Threads
+        start through ``inheritable_thread_target``, so the caller's job
+        group, description, scheduler pool and tags reach every job (a
+        streaming query's stop() still cancels them). All writes run to
+        completion before the first failure re-raises; replaying the
+        batch id skips whatever committed."""
+        if len(writes) <= 1:
+            return [w() for w in writes]
+        from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark import inheritable_thread_target
+
+        inherit = inheritable_thread_target(self.spark)
+        if not callable(inherit):
+            # pinned-thread mode off: no per-thread properties to carry
+            def inherit(f):
+                return f
+
+        width = min(len(writes), self.spark.sparkContext.defaultParallelism)
+        with ThreadPoolExecutor(max_workers=width) as pool:
+            futures = [pool.submit(inherit(w)) for w in writes]
+        return [f.result() for f in futures]
+
+    def _plan_writes(
         self,
         clean: DataFrame,
         items: list,
-        batch_id: int,
+        batch_id: int | None,
         n_clean_by_key: dict,
-    ) -> list[tuple[str, dict, bool, int]]:
-        """Route + append a multi-collection batch with ONE Spark write
-        job and ONE txn manifest per same-schema collection group.
+    ) -> tuple[list[tuple[str, dict, bool, int]], list]:
+        """Split one batch's collections into independent writes, after
+        inference and before any write starts. Returns the results known
+        without writing (grouped replays of a committed batch_id) and one
+        callable per write, each returning a list of
+        ``(table_name, append result, schema_evolved, type_drift_rows)``.
 
-        The per-collection path costs one driver-scheduled job plus one
-        commit per collection per trigger; at the reference's routed
-        shape (10 collections × 5k ev/s, spec.md:283-288) that driver
-        fan-out — not data volume — capped throughput and breached the
-        lag SLO on a degraded host (r9 verdict #1, BENCH_r09 p50 28.8 s).
-        Here collections whose post-evolution schema agrees are written
-        by a single job partitioned on a ``__route`` column (files land
-        under ``_txn_stage/<txn>/__route=<table>/<hive parts>``), the
-        files are adopted into each table's directory unpublished, and
-        one MultiTableTxn manifest publishes every table's commit with
-        its normal ``cdc-<table>`` marker — so a 10-collection trigger
-        pays ~1 job + 1 manifest + 10 O(1) log appends, crash-atomic by
-        the manifest (recover() rolls forward; sweep reaps pre-manifest
+        A multi-collection batch with a batch_id in AUTO/STRICT mode and
+        no current-state materialization is GROUPED: the per-collection
+        path costs one driver-scheduled job plus one commit per
+        collection per trigger; at the reference's routed shape (10
+        collections × 5k ev/s, spec.md:283-288) that driver fan-out — not
+        data volume — capped throughput and breached the lag SLO on a
+        degraded host (r9 verdict #1, BENCH_r09 p50 28.8 s). Collections
+        whose post-evolution schema agrees are written by a single job
+        partitioned on a ``__route`` column (files land under
+        ``_txn_stage/<txn>/__route=<table>/<hive parts>``), the files are
+        adopted into each table's directory unpublished, and one
+        MultiTableTxn manifest publishes every table's commit with its
+        normal ``cdc-<table>`` marker — so a 10-collection trigger pays
+        ~1 job + 1 manifest + 10 O(1) log appends, crash-atomic by the
+        manifest (recover() rolls forward; sweep reaps pre-manifest
         orphans). Collections that can't share a job (disagreeing
         schemas, bloom/generated-column table properties, layout change)
-        fall back to the per-collection append, same batch."""
+        and every collection of an ungrouped batch are single writes
+        through ``_ingest_collection`` (append, then its own __current
+        MERGE). ``_run_concurrently`` overlaps all of them."""
         from ..quality.reliability import (
             is_retryable,
             is_schema_error,
@@ -1067,9 +1065,28 @@ class CDCIngestor:
         )
         from ..sinks.table import ConcurrentWriteError
 
+        def single(key, sch):
+            return lambda: [
+                self._ingest_collection(
+                    clean,
+                    key,
+                    sch,
+                    batch_id,
+                    n_rows_hint=n_clean_by_key.get(key),
+                )
+            ]
+
+        if not (
+            self.coalesce_commits
+            and batch_id is not None
+            and self.mode != MergeMode.LOCKED
+            and not self.materialize_current
+            and len(items) > 1
+        ):
+            return [], [single(key, sch) for key, sch in items]
         results: list[tuple[str, dict, bool, int]] = []
         groups: dict[tuple[str, str], list[dict]] = {}
-        singles: list[tuple] = []
+        singles: list = []
         for key, (doc_schema, parse_schema) in items:
             db, coll = key
             table_name = f"{db}_{coll}"
@@ -1096,7 +1113,7 @@ class CDCIngestor:
             ):
                 # layout change (append's error message applies) or
                 # per-table write options a shared job can't honor
-                singles.append((key, (doc_schema, parse_schema)))
+                singles.append(single(key, (doc_schema, parse_schema)))
                 continue
             evolved = False
             if snap.schema is not None:
@@ -1120,42 +1137,34 @@ class CDCIngestor:
             groups.setdefault(
                 (doc_schema.json(), parse_schema.json()), []
             ).append(plan)
+        writes = []
         for gkey, members in sorted(groups.items()):
             if len(members) == 1:
                 m = members[0]
-                singles.append((m["key"], (m["doc_schema"], m["parse_schema"])))
+                singles.append(
+                    single(m["key"], (m["doc_schema"], m["parse_schema"]))
+                )
                 continue
 
             def run_group(members=members):
-                return self._write_group(clean, members, batch_id)
-
-            results.extend(
-                retry_call(
-                    run_group,
+                return retry_call(
+                    lambda: self._write_group(clean, members, batch_id),
                     self.retry_config,
                     retry_if=lambda e: isinstance(e, ConcurrentWriteError)
                     or is_retryable(e)
                     or is_schema_error(e),
                 )
-            )
-        for key, sch in singles:
-            results.append(
-                self._ingest_collection(
-                    clean,
-                    key,
-                    sch,
-                    batch_id,
-                    n_rows_hint=n_clean_by_key.get(key),
-                )
-            )
-        return results
+
+            writes.append(run_group)
+        return results, writes + singles
 
     def _write_group(
         self, clean: DataFrame, members: list[dict], batch_id: int
     ) -> list[tuple[str, dict, bool, int]]:
         """One grouped write attempt: job → adopt files → manifest commit.
-        Retried whole by _ingest_grouped; files from a failed attempt are
-        unpublished orphans (vacuum's orphan sweep / stage sweep reap)."""
+        Retried whole by its _plan_writes task; files from a failed
+        attempt are unpublished orphans (vacuum's orphan sweep / stage
+        sweep reap)."""
         import os
         import uuid
         from urllib.parse import unquote
@@ -1397,9 +1406,9 @@ class CDCIngestor:
         duration) at none of its per-row Python cost (measured 4.3x on
         the scan), provenance (db, collection) joins in from the
         discovery listing by file path, and ALL collections ingest as
-        one routed batch (P6), so per-collection appends run under
-        ``collection_parallelism`` threads instead of serializing one
-        ingest_batch per collection. ``reader="python"`` keeps the
+        one routed batch (P6), so the collections' writes overlap on
+        driver threads instead of serializing one ingest_batch per
+        collection. ``reader="python"`` keeps the
         portable ``format("mongodump")`` DataSource, one
         ``snapshot_load`` per collection (see cdc/mongodump.py).
 

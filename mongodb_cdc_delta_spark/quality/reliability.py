@@ -10,6 +10,7 @@ commit inside foreachBatch, where the reference wrapped its Delta writes.
 from __future__ import annotations
 
 import random
+import threading
 import time
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -98,7 +99,12 @@ class CircuitOpenError(Exception):
 class CircuitBreaker:
     """closed → (failures ≥ threshold) → open → (timeout) → half-open →
     success closes / failure reopens (reference error_handler.py:345-476,
-    defaults threshold=5, timeout=60 s)."""
+    defaults threshold=5, timeout=60 s).
+
+    Safe to share between threads (a batch's table writes call it
+    concurrently): state changes happen under a lock, and half-open
+    admits exactly ONE probe — every other caller is rejected as if open
+    until that probe's outcome closes or reopens the circuit."""
 
     def __init__(
         self,
@@ -109,12 +115,13 @@ class CircuitBreaker:
         self.failure_threshold = failure_threshold
         self.timeout_seconds = timeout_seconds
         self._clock = clock
+        self._lock = threading.Lock()
         self._failures = 0
         self._state = "closed"
         self._opened_at = 0.0
+        self._probing = False
 
-    @property
-    def state(self) -> str:
+    def _current(self) -> str:
         if (
             self._state == "open"
             and self._clock() - self._opened_at >= self.timeout_seconds
@@ -122,21 +129,34 @@ class CircuitBreaker:
             return "half-open"
         return self._state
 
+    @property
+    def state(self) -> str:
+        with self._lock:
+            return self._current()
+
     def call(self, fn: Callable[[], T]) -> T:
-        state = self.state
-        if state == "open":
-            raise CircuitOpenError(
-                f"circuit open; retry after {self.timeout_seconds}s"
-            )
+        with self._lock:
+            state = self._current()
+            if state == "open" or (state == "half-open" and self._probing):
+                raise CircuitOpenError(
+                    f"circuit open; retry after {self.timeout_seconds}s"
+                )
+            probe = state == "half-open"
+            self._probing = self._probing or probe
         try:
             result = fn()
         except BaseException:
-            self._failures += 1
-            if self._failures >= self.failure_threshold or state == "half-open":
-                self._state = "open"
-                self._opened_at = self._clock()
+            with self._lock:
+                self._failures += 1
+                if probe or self._failures >= self.failure_threshold:
+                    self._state = "open"
+                    self._opened_at = self._clock()
+                if probe:
+                    self._probing = False
             raise
-        else:
+        with self._lock:
             self._failures = 0
             self._state = "closed"
-            return result
+            if probe:
+                self._probing = False
+        return result

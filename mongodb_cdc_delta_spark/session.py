@@ -91,19 +91,3 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-
-def register_testdata(spark: SparkSession, sf_dir: str) -> None:
-    """Register the driver's parquet tables as temp views.
-
-    Uses ``spark.read.parquet`` directly — Catalyst then gets native parquet
-    scans with filter pushdown, column pruning, and (on partitioned layouts)
-    partition pruning for free.
-    """
-    try:
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    except Exception:
-        pass
-    for name in TABLE_NAMES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(name)

@@ -514,31 +514,43 @@ class TestAuditWriteThrough:
 
 class TestParallelCollections:
     def test_parallel_matches_serial(self, spark, tmp_path):
-        events = []
-        for coll in ("users", "orders", "items", "carts"):
-            for i in range(5):
-                events.append(
-                    envelope("c", coll=coll, after={"_id": f"{coll}{i}", "n": i})
-                )
+        """One batch of four collections plus a poison event — four
+        per-collection writes and the DLQ append, run concurrently —
+        lands what four single-collection batches land one by one."""
+        colls = ("users", "orders", "items", "carts")
+        by_coll = {
+            c: [
+                envelope("c", coll=c, after={"_id": f"{c}{i}", "n": i})
+                for i in range(5)
+            ]
+            for c in colls
+        }
         serial = CDCIngestor(spark, str(tmp_path / "s"))
-        s_stats = serial.ingest_batch(raw_df(spark, events), batch_id=0, now=NOW)
-        par = CDCIngestor(
-            spark, str(tmp_path / "p"), collection_parallelism=4
-        )
+        for c in colls:
+            serial.ingest_batch(raw_df(spark, by_coll[c]), batch_id=0, now=NOW)
+        events = [e for c in colls for e in by_coll[c]] + ["{{{not json"]
+        par = CDCIngestor(spark, str(tmp_path / "p"), coalesce_commits=False)
         p_stats = par.ingest_batch(raw_df(spark, events), batch_id=0, now=NOW)
-        assert set(s_stats.collections) == set(p_stats.collections)
-        for name in s_stats.collections:
-            assert (
-                s_stats.collections[name]["rows"]
-                == p_stats.collections[name]["rows"]
-                == 5
-            )
-            a = serial.table(name).read().orderBy("_id").collect()
-            b = par.table(name).read().orderBy("_id").collect()
-            assert [r["_id"] for r in a] == [r["_id"] for r in b]
-        # replay is still exactly-once per table under parallelism
+        assert set(p_stats.collections) == {f"shop_{c}" for c in colls}
+        assert p_stats.dlq_rows == 1
+        assert par.table("_dlq").read().count() == 1
+
+        def data(ing, name):
+            return [
+                (r["_id"], r["n"], r["_cdc_operation"])
+                for r in ing.table(name).read().orderBy("_id").collect()
+            ]
+
+        for name, res in p_stats.collections.items():
+            assert res["rows"] == 5 and not res["skipped"]
+            assert data(par, name) == data(serial, name)
+            assert par.table(name).schema() == serial.table(name).schema()
+        # replay is still exactly-once per table and for the DLQ
         p2 = par.ingest_batch(raw_df(spark, events), batch_id=0, now=NOW)
         assert all(r["skipped"] for r in p2.collections.values())
+        assert par.table("_dlq").read().count() == 1
+        for name in p_stats.collections:
+            assert par.table(name).count() == 5
 
 
 class TestDLQRateGuard:

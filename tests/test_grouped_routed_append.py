@@ -66,8 +66,6 @@ class TestGroupedParity:
         p = CDCIngestor(
             spark, str(tmp_path / "lake_p"), coalesce_commits=False
         )
-        g.collection_parallelism = 4
-        p.collection_parallelism = 4
         st_g = g.ingest_batch(raw, batch_id=1)
         st_p = p.ingest_batch(raw, batch_id=1)
         assert set(st_g.collections) == set(st_p.collections) == {

@@ -2,7 +2,7 @@
 
 The type-drift counter rides ``DataFrame.observe`` — a listener-based
 metric — under exactly the conditions where listener metrics break:
-per-collection driver worker threads (collection_parallelism > 1), DLQ
+per-collection writes running concurrently on driver threads, DLQ
 poison in the same batch, duplicate-batch replays (skipped txns must
 not read an unfired observation), and multi-collection routing. This
 soak generates ~25 seeded random batches over 5 collections with a
@@ -73,9 +73,7 @@ def test_locked_drift_soak(spark, tmp_path):
             seq += 1
     boot.ingest_batch(spark.createDataFrame(rows, "value string"), batch_id=0)
 
-    locked = CDCIngestor(
-        spark, root, mode=MergeMode.LOCKED, collection_parallelism=3
-    )
+    locked = CDCIngestor(spark, root, mode=MergeMode.LOCKED)
 
     # ledger[coll] = [total_rows, null_n_rows]
     ledger = {c: [4, 0] for c in COLLS}

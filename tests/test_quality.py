@@ -175,6 +175,79 @@ class TestCircuitBreaker:
         with pytest.raises(CircuitOpenError):
             cb.call(lambda: "x")
 
+    def test_half_open_admits_exactly_one_concurrent_probe(self):
+        import threading
+
+        t = [0.0]
+        cb = CircuitBreaker(
+            failure_threshold=1, timeout_seconds=10.0, clock=lambda: t[0]
+        )
+        with pytest.raises(IOError):
+            cb.call(lambda: (_ for _ in ()).throw(IOError("x")))
+        t[0] = 11.0
+        n = 8
+        ran, rejected = [], []
+        release = threading.Event()
+        lock = threading.Lock()
+
+        def probe():
+            with lock:
+                ran.append(1)
+            # hold the probe in flight until every other caller returned
+            assert release.wait(10)
+            return "ok"
+
+        def caller():
+            try:
+                cb.call(probe)
+            except CircuitOpenError:
+                with lock:
+                    rejected.append(1)
+                    if len(rejected) == n - 1:
+                        release.set()
+
+        threads = [threading.Thread(target=caller) for _ in range(n)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(15)
+        assert not any(th.is_alive() for th in threads)
+        assert len(ran) == 1 and len(rejected) == n - 1
+        assert cb.state == "closed"
+
+    def test_concurrent_failures_all_counted(self):
+        import os
+        import sys
+        import threading
+
+        # more threads than cores and a short switch interval: a lost
+        # `_failures += 1` update shows as a short count
+        n, calls = 4 * (os.cpu_count() or 1), 300
+        cb = CircuitBreaker(failure_threshold=10**9)
+        start = threading.Barrier(n)
+
+        def caller():
+            start.wait()
+            for _ in range(calls):
+                try:
+                    cb.call(lambda: (_ for _ in ()).throw(IOError("x")))
+                except IOError:
+                    pass
+
+        prev = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            threads = [threading.Thread(target=caller) for _ in range(n)]
+            for th in threads:
+                th.start()
+            for th in threads:
+                th.join(60)
+        finally:
+            sys.setswitchinterval(prev)
+        assert not any(th.is_alive() for th in threads)
+        assert cb._failures == n * calls
+        assert cb.state == "closed"
+
 
 class TestQualityObserve:
     def test_metrics_ride_the_action(self, spark):

@@ -156,7 +156,7 @@ def test_stream_with_current_state_materialization(spark, dirs):
 
 def test_full_stack_stream_integration(spark, dirs):
     """Pipeline + current-state materialization + control-plane audit +
-    parallel collections, over two micro-batch rounds with a replay: the
+    concurrent per-collection writes, over two micro-batch rounds with a replay: the
     complete operational wiring in one test."""
     from mongodb_cdc_delta_spark.cdc.control import ControlPlane
     from mongodb_cdc_delta_spark.cdc.pipeline import CDCIngestor
@@ -164,13 +164,12 @@ def test_full_stack_stream_integration(spark, dirs):
     src, lake = dirs
     control = ControlPlane(spark, lake)
     pipe = CDCStreamPipeline(spark, lake, materialize_current=True)
-    # swap in a fully-loaded ingestor (audit + parallel collections)
+    # swap in a fully-loaded ingestor (audit + current-state MERGE)
     pipe.ingestor = CDCIngestor(
         spark,
         lake,
         materialize_current=True,
         control_plane=control,
-        collection_parallelism=2,
     )
     write_events(
         src,

@@ -138,7 +138,6 @@ def main() -> None:
             maint_events.append(tick)
 
     pipe = CDCStreamPipeline(spark, lake, trigger_seconds=4.0)
-    pipe.ingestor.collection_parallelism = COLLECTIONS
     query = pipe.start(
         pipe.from_files(src, max_files_per_trigger=64 * COLLECTIONS),
         query_name="soak-r8",
