@@ -22,7 +22,6 @@ from __future__ import annotations
 from enum import Enum
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     AtomicType,
@@ -239,76 +238,119 @@ def schema_diff(s1: StructType, s2: StructType) -> dict[str, list[str]]:
     }
 
 
-def _cast_expr(col, src: DataType, dst: DataType, scalar_rule=None):
-    """Column expression casting src-typed col to dst, rebuilding nested
-    structs field-by-field (plain .cast can't add struct fields).
+def quote(name: str) -> str:
+    """``name`` as one backtick-quoted SQL identifier: a MongoDB field
+    name may hold dots, spaces or backticks, which bare text would read
+    as a path or a syntax error."""
+    return "`" + name.replace("`", "``") + "`"
 
-    ``scalar_rule(col, src, dst) -> Column | None`` overrides individual
+
+def sql_str(text: str) -> str:
+    """``text`` as a SQL string literal."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def ddl(t: DataType) -> str:
+    """SQL type text for ``t``. ARRAY and MAP cannot spell a non-null
+    element or value, so a cast to such a type reads back nullable there;
+    struct field nullability is kept."""
+    if isinstance(t, StructType):
+        return "STRUCT<" + ", ".join(
+            f"{quote(f.name)}: {ddl(f.dataType)}"
+            + ("" if f.nullable else " NOT NULL")
+            for f in t.fields
+        ) + ">"
+    if isinstance(t, ArrayType):
+        return f"ARRAY<{ddl(t.elementType)}>"
+    if isinstance(t, MapType):
+        return f"MAP<{ddl(t.keyType)}, {ddl(t.valueType)}>"
+    return t.simpleString()
+
+
+def _cast_sql(
+    expr: str, src: DataType, dst: DataType, scalar_rule=None, depth: int = 0
+) -> str:
+    """SQL text casting the src-typed ``expr`` to dst, rebuilding nested
+    structs field by field (a plain CAST can't add struct fields).
+
+    ``scalar_rule(expr, src, dst) -> str | None`` overrides individual
     scalar casts (e.g. the CDC convention that a long cast to timestamp is
     epoch *millis*, where Spark's CAST would read seconds)."""
     if src == dst:
-        return col
+        return expr
     if isinstance(src, StructType) and isinstance(dst, StructType):
-        smap = {f.name: f for f in src.fields}
+        smap = {f.name: f.dataType for f in src.fields}
         parts = []
         for f in dst.fields:
             if f.name in smap:
-                parts.append(
-                    _cast_expr(
-                        col.getField(f.name),
-                        smap[f.name].dataType,
-                        f.dataType,
-                        scalar_rule,
-                    ).alias(f.name)
+                val = _cast_sql(
+                    f"{expr}.{quote(f.name)}",
+                    smap[f.name],
+                    f.dataType,
+                    scalar_rule,
+                    depth,
                 )
             else:
-                parts.append(F.lit(None).cast(f.dataType).alias(f.name))
-        # preserve top-level NULL structs instead of materializing a
-        # struct of NULLs
-        return F.when(col.isNull(), F.lit(None)).otherwise(
-            F.struct(*parts)
-        ).cast(dst)
+                val = f"CAST(NULL AS {ddl(f.dataType)})"
+            parts.append(f"{sql_str(f.name)}, {val}")
+        # preserve NULL structs instead of materializing a struct of NULLs
+        return (
+            f"CAST(CASE WHEN {expr} IS NULL THEN NULL "
+            f"ELSE named_struct({', '.join(parts)}) END AS {ddl(dst)})"
+        )
     if isinstance(src, ArrayType) and isinstance(dst, ArrayType):
-        return F.transform(
-            col,
-            lambda x: _cast_expr(x, src.elementType, dst.elementType, scalar_rule),
-        ).cast(dst)
+        x = quote(f"__e{depth}")
+        body = _cast_sql(
+            x, src.elementType, dst.elementType, scalar_rule, depth + 1
+        )
+        return f"CAST(transform({expr}, {x} -> {body}) AS {ddl(dst)})"
     if isinstance(src, MapType) and isinstance(dst, MapType):
         # recurse on values so scalar_rule reaches map payloads (LOCKED
-        # parses map<_, timestamp> as map<_, string>; a plain .cast here
+        # parses map<_, timestamp> as map<_, string>; a plain CAST here
         # would bypass the digit-string disambiguation — epoch-millis map
         # values then raise under ANSI instead of converting)
-        return F.transform_values(
-            col,
-            lambda _k, v: _cast_expr(
-                v, src.valueType, dst.valueType, scalar_rule
-            ),
-        ).cast(dst)
+        k, v = quote(f"__k{depth}"), quote(f"__v{depth}")
+        body = _cast_sql(
+            v, src.valueType, dst.valueType, scalar_rule, depth + 1
+        )
+        return (
+            f"CAST(transform_values({expr}, ({k}, {v}) -> {body}) "
+            f"AS {ddl(dst)})"
+        )
     if scalar_rule is not None:
-        custom = scalar_rule(col, src, dst)
+        custom = scalar_rule(expr, src, dst)
         if custom is not None:
             return custom
-    return col.cast(dst)
+    return f"CAST({expr} AS {ddl(dst)})"
+
+
+def projection_sql(
+    sources: dict[str, tuple[str, DataType]],
+    target: StructType,
+    scalar_rule=None,
+) -> list[str]:
+    """One select expression per ``target`` field: its source
+    ``(sql, type)`` from ``sources`` cast to the field's type, or a typed
+    NULL when the field has no source. A field whose source is already
+    the same-named column of the same type stays a bare quoted name."""
+    out = []
+    for f in target.fields:
+        name = quote(f.name)
+        if f.name in sources:
+            expr, src = sources[f.name]
+            e = _cast_sql(expr, src, f.dataType, scalar_rule)
+        else:
+            e = f"CAST(NULL AS {ddl(f.dataType)})"
+        out.append(e if e == name else f"{e} AS {name}")
+    return out
 
 
 def cast_to_schema(
     df: DataFrame, target: StructType, scalar_rule=None
 ) -> DataFrame:
     """Project df onto `target`: missing columns become NULLs, present ones
-    are cast (recursively for structs/arrays). This is the pre-write
-    reconciliation the reference does in delta_writer.py:114-129."""
-    src_map = {f.name: f for f in df.schema.fields}
-    cols = []
-    for f in target.fields:
-        if f.name in src_map:
-            cols.append(
-                _cast_expr(
-                    F.col(f.name),
-                    src_map[f.name].dataType,
-                    f.dataType,
-                    scalar_rule,
-                ).alias(f.name)
-            )
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return df.select(*cols)
+    are cast (recursively for structs/arrays/maps). This is the pre-write
+    reconciliation the reference does in delta_writer.py:114-129. The
+    projection is built as SQL text and sent in one ``selectExpr``."""
+    sources = {f.name: (quote(f.name), f.dataType) for f in df.schema.fields}
+    return df.selectExpr(*projection_sql(sources, target, scalar_rule))

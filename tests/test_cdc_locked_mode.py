@@ -247,8 +247,8 @@ class TestLockedMode:
         )
 
     def test_locked_map_timestamp_values_convert(self, spark):
-        # r7 review: _cast_expr previously fell through to a plain
-        # .cast for MapType, bypassing locked_cast_rule — epoch-millis
+        # r7 review: the cast renderer previously fell through to a plain
+        # CAST for MapType, bypassing locked_cast_rule — epoch-millis
         # map values then raised under ANSI. Pin the full cast path:
         # map<string,string> wire values -> map<string,timestamp>.
         from mongodb_cdc_delta_spark.cdc.pipeline import locked_cast_rule

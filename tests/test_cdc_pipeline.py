@@ -18,7 +18,9 @@ from mongodb_cdc_delta_spark.cdc.pipeline import (
     CDC_META_COLUMNS,
     CDCIngestor,
     DLQReason,
-    infer_doc_schema,
+    _parse_events_full,
+    doc_schemas,
+    infer_collections,
     normalize_extended_json,
     parse_events,
 )
@@ -50,6 +52,14 @@ def raw_df(spark, values, with_kafka=True):
             rows, "value string, topic string, partition int, offset long"
         )
     return spark.createDataFrame([(v,) for v in values], "value string")
+
+
+def _normalized(spark, doc):
+    return (
+        spark.createDataFrame([(doc,)], "doc string")
+        .selectExpr(f"{normalize_extended_json('doc')} AS d")
+        .first()["d"]
+    )
 
 
 class TestParseEvents:
@@ -144,9 +154,7 @@ class TestExtendedJson:
             ' "count": {"$numberLong": "42"},'
             ' "blob": {"$binary": {"base64": "aGVsbG8=", "subType": "00"}}}'
         )
-        out = spark.range(1).select(
-            normalize_extended_json(F.lit(doc)).alias("d")
-        ).first()["d"]
+        out = _normalized(spark, doc)
         parsed = json.loads(out)
         assert parsed["_id"] == "65b0a1b2c3d4e5f601234567"
         assert parsed["when"] == 1706054400000
@@ -165,9 +173,7 @@ class TestExtendedJson:
             ' "neginf": {"$numberDouble": "-Infinity"},'
             ' "legacy_when": {"$date": 1706054400000}}'
         )
-        out = spark.range(1).select(
-            normalize_extended_json(F.lit(doc)).alias("d")
-        ).first()["d"]
+        out = _normalized(spark, doc)
         assert '"tiny": 1.5e-3' in out
         assert '"huge": -2.5E+10' in out
         assert '"nan": NaN' in out
@@ -176,13 +182,11 @@ class TestExtendedJson:
         # and the parse path (from_json, which accepts non-numeric doubles)
         # recovers the typed values
         parsed = (
-            spark.range(1)
-            .select(
-                F.from_json(
-                    normalize_extended_json(F.lit(doc)),
-                    "tiny double, huge double, nan double, neginf double, "
-                    "legacy_when long",
-                ).alias("p")
+            spark.createDataFrame([(doc,)], "doc string")
+            .selectExpr(
+                f"from_json({normalize_extended_json('doc')}, 'tiny double, "
+                "huge double, nan double, neginf double, legacy_when long') "
+                "AS p"
             )
             .select("p.*")
             .first()
@@ -194,17 +198,24 @@ class TestExtendedJson:
         assert parsed["legacy_when"] == 1706054400000
 
     def test_infer_doc_schema(self, spark):
-        docs = spark.createDataFrame(
-            [
-                ('{"a": 1, "b": "x", "nested": {"c": 1.5}}',),
-                ('{"a": 2, "d": true}',),
-            ],
-            "doc string",
+        # the shipped inference: one aggregate per batch, then the BSON
+        # wrapper refinement ($date millis → timestamp parsed as long)
+        events = [
+            envelope("c", after={"a": 1, "b": "x", "nested": {"c": 1.5}}),
+            envelope("c", after={"a": 2, "d": True, "t": {"$date": TS}}),
+        ]
+        parsed, _, _ = _parse_events_full(raw_df(spark, events), now=NOW)
+        (row,) = infer_collections(parsed)
+        assert (row["db"], row["collection"], row["n_clean"], row["n_dlq"]) == (
+            "shop", "users", 2, 0
         )
-        schema = infer_doc_schema(docs)
+        schema, parse = doc_schemas(row["ddl"])
         names = {f.name for f in schema.fields}
-        assert names == {"a", "b", "nested", "d"}
+        assert names == {"a", "b", "nested", "d", "t"}
         assert schema["nested"].dataType.typeName() == "struct"
+        assert schema["nested"].dataType["c"].dataType.typeName() == "double"
+        assert schema["t"].dataType.typeName() == "timestamp"
+        assert parse["t"].dataType.typeName() == "long"
 
 
 class TestCDCIngestor:
@@ -324,9 +335,7 @@ class TestExtendedJsonExtras:
             '{"u": {"$uuid": "3b241101-e2bb-4255-8caf-4136c566a962"},'
             ' "t": {"$timestamp": {"t": 1706054400, "i": 3}}}'
         )
-        out = spark.range(1).select(
-            normalize_extended_json(F.lit(doc)).alias("d")
-        ).first()["d"]
+        out = _normalized(spark, doc)
         parsed = json.loads(out)
         assert parsed["u"] == "3b241101-e2bb-4255-8caf-4136c566a962"
         assert parsed["t"] == 1706054400

@@ -378,7 +378,6 @@ class TestProductQuantization:
         assert len(fp32 & pq) >= 5
 
     @pytest.mark.slow  # r11 fast-tier: heavy accuracy/soak contract, full-battery lane
-
     def test_bounded_training_sample(self, spark):
         """Codebook training above train_rows runs on a deterministic
         hash sample: flat training cost at corpus scale (FAISS regime).
