@@ -52,13 +52,22 @@ from pyspark.sql.types import (
 )
 
 from ..schema import MergeMode, merge_schemas
-from ..schema.types import ddl, projection_sql, quote, sql_str
+from ..schema.types import (
+    SchemaEvolutionError,
+    ddl,
+    projection_sql,
+    quote,
+    sql_str,
+)
 from ..sinks.table import LakeTable
 
 MAX_DOCUMENT_BYTES = 16 * 1024 * 1024  # MongoDB's 16 MB document cap
 STALE_DAYS_DEFAULT = 7  # spec FR-024 (spec.md:302-305)
-#: per-collection append task sizing: one write task per ~this many clean
-#: rows (see _ingest_collection — the routed-lane headroom fix, r10)
+#: group write task sizing: one write task per ~this many clean rows, so
+#: a small group is ONE task (and one file per table) while a large
+#: backlog still fans out; per-task overhead, not data, dominated batch
+#: wall time when every slice inherited the source partition count
+#: (the routed-lane headroom fix, r10)
 ROWS_PER_WRITE_TASK = 20_000
 
 #: CDC metadata columns appended to every table
@@ -625,7 +634,6 @@ class CDCIngestor:
         key_col: str = "_id",
         control_plane=None,
         dlq_max_rows_per_batch: int = 10_000,
-        coalesce_commits: bool = True,
     ):
         import os
 
@@ -634,15 +642,7 @@ class CDCIngestor:
 
         self.spark = spark
         self.lake_root = lake_root
-        #: one write JOB + one txn manifest per same-schema collection
-        #: GROUP instead of one job + one commit per collection — the
-        #: routed-lane headroom fix (r9 verdict #1); per-table behavior
-        #: (txn markers, evolution, stats shape) is identical. Grouping
-        #: applies only where safe: AUTO/STRICT, batch_id set, no
-        #: current-state materialization, no per-table bloom/generated
-        #: properties; everything else falls back per collection.
-        self.coalesce_commits = coalesce_commits
-        # roll forward any coalesced txn a previous process left mid-
+        # roll forward any group txn a previous process left mid-
         # finalize (manifest present ⇒ the batch MUST complete), and
         # sweep stage dirs orphaned by a crash before prepare()
         self._txn_dir = os.path.join(lake_root, "_txn")
@@ -694,9 +694,6 @@ class CDCIngestor:
             or is_schema_error(e),
         )
 
-    def _guarded_append(self, table: LakeTable, rows, **kwargs):
-        return self._guarded(lambda: table.append(rows, **kwargs))
-
     def table(self, name: str) -> LakeTable:
         import os
 
@@ -715,9 +712,9 @@ class CDCIngestor:
         exactly-once: txn app_id per table + batch_id as txn version).
         ``dlq_app_id`` namespaces the shared ``_dlq`` table's txn marker:
         callers that split ONE logical batch_id across several
-        ingest_batch calls (the python-reader snapshot path runs one per
-        collection) must pass distinct ids, or the second call's DLQ
-        append is skipped as an already-committed replay.
+        ingest_batch calls (one ``snapshot_load`` per collection) must
+        pass distinct ids, or the second call's DLQ append is skipped as
+        an already-committed replay.
         """
         stats = IngestStats()
         # ONE cached parse: both branches (clean → inference + append, dlq →
@@ -779,7 +776,7 @@ class CDCIngestor:
             n_clean_by_key = {
                 (r["db"], r["collection"]): r["n_clean"] for r in inferred
             }
-            results, writes = self._plan_writes(
+            writes = self._plan_writes(
                 clean, sorted(schemas.items()), batch_id, n_clean_by_key
             )
             stats.dlq_rows = n_dlq
@@ -799,14 +796,15 @@ class CDCIngestor:
                 txn = (dlq_app_id, batch_id) if batch_id is not None else None
 
                 def write_dlq():
-                    self._guarded_append(
-                        self.table("_dlq"), dlq, partition_by=[], txn=txn
+                    self._guarded(
+                        lambda: self.table("_dlq").append(
+                            dlq, partition_by=[], txn=txn
+                        )
                     )
                     return []
 
                 writes.append(write_dlq)
-            for out in self._run_concurrently(writes):
-                results.extend(out)
+            results = [r for out in self._run_concurrently(writes) for r in out]
             for table_name, res, evolved, drift_rows in results:
                 stats.collections[table_name] = res
                 if evolved:
@@ -836,124 +834,6 @@ class CDCIngestor:
             except Exception:
                 pass  # audit is best-effort; never fail the data write
         return stats
-
-    def _ingest_collection(
-        self,
-        clean: DataFrame,
-        key: tuple[str, str],
-        schemas: tuple[StructType, StructType],
-        batch_id: int | None,
-        n_rows_hint: int | None = None,
-    ) -> tuple[str, dict, bool, int]:
-        """Route + evolve + append one collection's slice of the batch.
-        Returns (table_name, append result, schema_evolved,
-        type_drift_rows) — the last is LOCKED-mode-only and 0 elsewhere."""
-        db, coll = key
-        doc_schema, parse_schema = schemas
-        table_name = f"{db}_{coll}"
-        sub = clean.where(
-            f"`db` = {sql_str(db)} AND `collection` = {sql_str(coll)}"
-        )
-        if n_rows_hint is not None:
-            # Right-size this slice's tasks. A routed batch fans N
-            # collections out of ONE cached scan, so every slice inherits
-            # the source partition count — at 10 collections x ~30 input
-            # partitions that is ~300 tasks for a 40k-row trigger, and
-            # per-task overhead (not data) dominates batch wall time;
-            # this headroom loss is what breached the routed-lane lag
-            # SLO on a degraded host (r9 verdict #1). ~20k rows per
-            # write task keeps a small slice at ONE task (and one
-            # output file) while a large backlog slice still fans out.
-            want = (n_rows_hint + ROWS_PER_WRITE_TASK - 1) // (
-                ROWS_PER_WRITE_TASK
-            )
-            sub = sub.coalesce(max(1, want))
-        table = self.table(table_name)
-        evolved = False
-        live = None if self.mode == MergeMode.LOCKED else table.schema()
-        if live is not None:
-            data_schema = StructType(
-                [f for f in live.fields if f.name not in CDC_META_COLUMNS]
-            )
-            doc_schema = merge_schemas(data_schema, doc_schema, self.mode)
-            evolved = doc_schema != data_schema
-        # millis-longs → timestamps + align to the merged schema; in
-        # LOCKED mode the parse schema read timestamps as strings (wire
-        # form unknown without inference), so the rule also resolves
-        # digit-strings → epoch millis vs ISO literals
-        full_target = StructType(
-            list(doc_schema.fields) + list(_meta_schema(clean).fields)
-        )
-        obs = None
-        if self.mode != MergeMode.LOCKED:
-            rows = _typed_rows(
-                sub, parse_schema, full_target, millis_cast_rule
-            )
-        else:
-            # ADVICE r6 + r7 review: value-level type drift in LOCKED
-            # mode (wire token present, value nulled by the pinned-type
-            # parse OR by the pinned-type cast — timestamps parse as
-            # strings, so cast-level nulling is the only signal for
-            # them) must not be silent. The normalized envelope rides
-            # through the cast as a passthrough column; the probe compares
-            # the wire token against the FINAL post-cast value and sums
-            # via observe(), which piggybacks the metric on the append job
-            # itself — zero extra Spark jobs on the hot path.
-            from pyspark.sql import Observation
-
-            rows = _typed_rows(
-                sub,
-                parse_schema,
-                full_target,
-                locked_cast_rule,
-                {"__wire": (NORMALIZED_DOC, StringType())},
-            )
-            # Allowlist probe-safe names (r7 ADVICE): JSONPath has more
-            # metacharacters ('.', quotes, '[', ']', '*', '$', whitespace
-            # — all legal in MongoDB field names); get_json_object on such
-            # a path is engine-defined, so those fields are SKIPPED from
-            # the probe rather than mis-probed.
-            probed = [
-                f.name
-                for f in doc_schema.fields
-                if re.fullmatch(r"[A-Za-z0-9_]+", f.name)
-            ]
-            if probed:
-                drifted = " + ".join(
-                    f"CAST(get_json_object(`__wire`, '$.{name}') IS NOT NULL"
-                    f" AND {quote(name)} IS NULL AS INT)"
-                    for name in probed
-                )
-                obs = Observation()
-                rows = rows.observe(
-                    obs,
-                    F.expr(
-                        f"coalesce(sum(CAST({drifted} > 0 AS INT)), 0) "
-                        "AS `type_drift_rows`"
-                    ),
-                )
-            rows = rows.drop("__wire")
-        txn = (f"cdc-{table_name}", batch_id) if batch_id is not None else None
-        res = self._guarded_append(
-            table,
-            rows,
-            partition_by=self.partition_by,
-            mode=self.mode,
-            txn=txn,
-        )
-        # run the __current merge even when the main append was skipped as
-        # a duplicate: a retry that crashed between the two commits would
-        # otherwise never materialize this batch. The merge's own txn
-        # (cdc-current-<table>, batch_id) makes re-merges no-ops.
-        if self.materialize_current:
-            self._merge_current_state(table_name, rows, batch_id)
-        drift_rows = 0
-        if obs is not None and not res.get("skipped"):
-            # the append executed, so the observed metric is available
-            # without blocking (a skipped duplicate txn runs no job and
-            # the observation never fires — reading it would hang)
-            drift_rows = int(obs.get.get("type_drift_rows") or 0)
-        return table_name, res, evolved, drift_rows
 
     def _sweep_stale_stages(self, max_age_sec: float = 3600.0) -> None:
         """Remove ``_txn_stage`` dirs older than ``max_age_sec`` with no
@@ -1012,244 +892,276 @@ class CDCIngestor:
         items: list,
         batch_id: int | None,
         n_clean_by_key: dict,
-    ) -> tuple[list[tuple[str, dict, bool, int]], list]:
-        """Split one batch's collections into independent writes, after
-        inference and before any write starts. Returns the results known
-        without writing (grouped replays of a committed batch_id) and one
-        callable per write, each returning a list of
+    ) -> list:
+        """Split one batch's collections into routed groups, after
+        inference and before any write starts, and return one write task
+        per group (``_write_group``), each returning a list of
         ``(table_name, append result, schema_evolved, type_drift_rows)``.
 
-        A multi-collection batch with a batch_id in AUTO/STRICT mode and
-        no current-state materialization is GROUPED: the per-collection
-        path costs one driver-scheduled job plus one commit per
-        collection per trigger; at the reference's routed shape (10
-        collections × 5k ev/s, spec.md:283-288) that driver fan-out — not
-        data volume — capped throughput and breached the lag SLO on a
-        degraded host (r9 verdict #1, BENCH_r09 p50 28.8 s). Collections
-        whose post-evolution schema agrees are written by a single job
+        Every collection is a member of exactly one group; a batch of one
+        collection is a group of one. Members share a group when they
+        agree on the table target schema, the parse schema and the
+        per-table write options (bloom-filter columns, generated
+        partition columns), so that one job can honour them all. Routing
+        N collections through one job is the routed-lane headroom fix: a
+        job plus a commit per collection per trigger capped throughput at
+        the reference's routed shape (10 collections × 5k ev/s,
+        spec.md:283-288; r9 verdict #1, BENCH_r09 p50 28.8 s). A member
+        whose plan already failed (a partition layout change, a schema its
+        mode refuses) is a group of its own whose write raises that error,
+        so only that table's write fails. A member whose ``cdc-<table>``
+        mark already holds ``batch_id`` is a replay: its group writes
+        nothing for it, but still runs its ``__current`` MERGE.
+        ``_run_concurrently`` overlaps the groups."""
+        meta = _meta_schema(clean)
+        groups: dict[tuple, list[dict]] = {}
+        for key, (doc_schema, parse_schema) in items:
+            table_name = f"{key[0]}_{key[1]}"
+            table = self.table(table_name)
+            m = {
+                "table_name": table_name,
+                "parse_schema": parse_schema,
+                "n": int(n_clean_by_key.get(key, 0)),
+                "evolved": False,
+                "skipped": None,
+                "error": None,
+            }
+            if (
+                batch_id is not None
+                and table.txn_version(f"cdc-{table_name}") >= batch_id
+            ):
+                m["skipped"] = {
+                    "rows": 0,
+                    "files": 0,
+                    "version": table.version(),
+                    "skipped": True,
+                }
+            snap = table._replay()
+            live = snap.schema
+            data = doc_schema
+            if snap.files and list(snap.partition_by) != self.partition_by:
+                # mixed hive layouts under one basePath silently drop
+                # files; layout changes go through repartition_table
+                m["error"] = ValueError(
+                    f"partition layout change {snap.partition_by} -> "
+                    f"{self.partition_by} on a non-empty table: use "
+                    f"repartition_table() to rewrite into the new layout"
+                )
+            elif live is not None:
+                live_data = StructType(
+                    [f for f in live.fields if f.name not in CDC_META_COLUMNS]
+                )
+                try:
+                    data = merge_schemas(live_data, doc_schema, self.mode)
+                except SchemaEvolutionError as e:
+                    m["error"] = e
+                else:
+                    m["evolved"] = data != live_data
+            # the table's own field order (an evolved table stores added
+            # fields after the metadata columns), then any new fields
+            fields = {f.name: f for f in [*data.fields, *meta.fields]}
+            order = [f.name for f in live.fields] if live is not None else []
+            order += [n for n in fields if n not in order]
+            m["target"] = StructType([fields[n] for n in order if n in fields])
+            gens = table._generated_columns()
+            m["generated"] = tuple(
+                (p, gens[p])
+                for p in self.partition_by
+                if p in gens and p not in fields
+            )
+            m["bloom"] = tuple(c for c in table.bloom_columns() if c in fields)
+            gkey = (
+                m["target"].json(),
+                parse_schema.json(),
+                m["bloom"],
+                m["generated"],
+                table_name if m["error"] is not None else None,
+            )
+            groups.setdefault(gkey, []).append(m)
+        return [
+            lambda members=members: self._write_group(clean, members, batch_id)
+            for members in groups.values()
+        ]
+
+    def _write_group(
+        self, clean: DataFrame, members: list[dict], batch_id: int | None
+    ) -> list[tuple[str, dict, bool, int]]:
+        """One group's write task: one job writes every member's rows
         partitioned on a ``__route`` column (files land under
         ``_txn_stage/<txn>/__route=<table>/<hive parts>``), the files are
         adopted into each table's directory unpublished, and one
-        MultiTableTxn manifest publishes every table's commit with its
-        normal ``cdc-<table>`` marker — so a 10-collection trigger pays
-        ~1 job + 1 manifest + 10 O(1) log appends, crash-atomic by the
-        manifest (recover() rolls forward; sweep reaps pre-manifest
-        orphans). Collections that can't share a job (disagreeing
-        schemas, bloom/generated-column table properties, layout change)
-        and every collection of an ungrouped batch are single writes
-        through ``_ingest_collection`` (append, then its own __current
-        MERGE). ``_run_concurrently`` overlaps all of them."""
-        def single(key, sch):
-            return lambda: [
-                self._ingest_collection(
-                    clean,
-                    key,
-                    sch,
-                    batch_id,
-                    n_rows_hint=n_clean_by_key.get(key),
-                )
-            ]
-
-        if not (
-            self.coalesce_commits
-            and batch_id is not None
-            and self.mode != MergeMode.LOCKED
-            and not self.materialize_current
-            and len(items) > 1
-        ):
-            return [], [single(key, sch) for key, sch in items]
-        results: list[tuple[str, dict, bool, int]] = []
-        groups: dict[tuple[str, str], list[dict]] = {}
-        singles: list = []
-        for key, (doc_schema, parse_schema) in items:
-            db, coll = key
-            table_name = f"{db}_{coll}"
-            table = self.table(table_name)
-            if table.txn_version(f"cdc-{table_name}") >= batch_id:
-                results.append(
-                    (
-                        table_name,
-                        {
-                            "rows": 0,
-                            "files": 0,
-                            "version": table.version(),
-                            "skipped": True,
-                        },
-                        False,
-                        0,
-                    )
-                )
-                continue
-            snap = table._replay()
-            if (snap.files and list(snap.partition_by) != self.partition_by) or (
-                table.properties().get("bloom.filter.columns")
-                or table._generated_columns()
-            ):
-                # layout change (append's error message applies) or
-                # per-table write options a shared job can't honor
-                singles.append(single(key, (doc_schema, parse_schema)))
-                continue
-            evolved = False
-            if snap.schema is not None:
-                data_schema = StructType(
-                    [
-                        f
-                        for f in snap.schema.fields
-                        if f.name not in CDC_META_COLUMNS
-                    ]
-                )
-                doc_schema = merge_schemas(data_schema, doc_schema, self.mode)
-                evolved = doc_schema != data_schema
-            plan = {
-                "key": key,
-                "table_name": table_name,
-                "doc_schema": doc_schema,
-                "parse_schema": parse_schema,
-                "evolved": evolved,
-                "n": int(n_clean_by_key.get(key, 0)),
-            }
-            groups.setdefault(
-                (doc_schema.json(), parse_schema.json()), []
-            ).append(plan)
-        writes = []
-        for gkey, members in sorted(groups.items()):
-            if len(members) == 1:
-                m = members[0]
-                singles.append(
-                    single(m["key"], (m["doc_schema"], m["parse_schema"]))
-                )
-                continue
-
-            def run_group(members=members):
-                return self._guarded(
-                    lambda: self._write_group(clean, members, batch_id)
-                )
-
-            writes.append(run_group)
-        return results, writes + singles
-
-    def _write_group(
-        self, clean: DataFrame, members: list[dict], batch_id: int
-    ) -> list[tuple[str, dict, bool, int]]:
-        """One grouped write attempt: job → adopt files → manifest commit.
-        Retried whole by its _plan_writes task; files from a failed
-        attempt are unpublished orphans (vacuum's orphan sweep / stage
-        sweep reap)."""
+        MultiTableTxn commit publishes every table with its ``cdc-<table>``
+        mark — crash-atomic by the manifest (recover() rolls forward; the
+        stage sweep reaps pre-manifest orphans). That attempt runs under
+        ``_guarded``; a failed attempt leaves only unpublished orphans.
+        LOCKED mode counts each member's type drift on the same job. With
+        ``materialize_current`` each member's ``__current`` MERGE runs
+        after the commit, replayed members included, each under
+        ``_guarded`` too."""
         import os
+        import shutil
         import uuid
         from urllib.parse import unquote
 
         from pyspark.sql import Observation
 
-        from ..sinks.table import _collect_file_stats
+        from ..sinks.table import adopt_staged, bloom_options
         from ..sinks.txn import MultiTableTxn
 
-        parse_schema = members[0]["parse_schema"]
-        doc_schema = members[0]["doc_schema"]
-        names = [m["table_name"] for m in members]
-        total = sum(m["n"] for m in members)
+        first = members[0]
+        if first["error"] is not None:
+            # a plan that failed is this table's own failed write
+
+            def fail():
+                raise first["error"]
+
+            self._guarded(fail)
+        live = [m for m in members if not m["skipped"]]
+        locked = self.mode == MergeMode.LOCKED
         route = "concat(`db`, '_', `collection`)"
+        total = sum(m["n"] for m in members)
         sub = clean.where(
-            f"{route} IN ({', '.join(sql_str(n) for n in names)})"
+            f"{route} IN ({', '.join(sql_str(m['table_name']) for m in members)})"
         ).coalesce(
             max(1, (total + ROWS_PER_WRITE_TASK - 1) // ROWS_PER_WRITE_TASK)
         )
-        full_target = StructType(
-            list(doc_schema.fields) + list(_meta_schema(clean).fields)
-        )
+        extra = {"__route": (route, StringType())}
+        metrics = [F.expr("count(1) AS `rows`")]
+        # probe-safe names only: JSONPath metacharacters ('.', quotes, '[',
+        # ']', '*', '$', whitespace) are legal in MongoDB field names, and
+        # get_json_object on such a path is engine-defined
+        probed = [
+            f.name
+            for f in first["target"].fields
+            if locked
+            and f.name not in CDC_META_COLUMNS
+            and re.fullmatch(r"[A-Za-z0-9_]+", f.name)
+        ]
+        if probed:
+            # LOCKED value-level type drift (wire token present, value
+            # nulled by the pinned-type parse or cast — timestamps parse as
+            # strings, so the cast is their only signal) must not be
+            # silent: the normalized envelope rides through the cast, and
+            # one sum per member compares it to the final value on the
+            # write job itself — no extra job
+            extra["__wire"] = (NORMALIZED_DOC, StringType())
+            drifted = " + ".join(
+                f"CAST(get_json_object(`__wire`, '$.{name}') IS NOT NULL"
+                f" AND {quote(name)} IS NULL AS INT)"
+                for name in probed
+            )
+            metrics += [
+                F.expr(
+                    f"coalesce(sum(CAST(`__route` = {sql_str(m['table_name'])}"
+                    f" AND ({drifted}) > 0 AS INT)), 0) AS `drift{i}`"
+                )
+                for i, m in enumerate(live)
+            ]
         rows = _typed_rows(
             sub,
-            parse_schema,
-            full_target,
-            millis_cast_rule,
-            {"__route": (route, StringType())},
+            first["parse_schema"],
+            first["target"],
+            locked_cast_rule if locked else millis_cast_rule,
+            extra,
         )
-        txn_id = uuid.uuid4().hex
-        stage = os.path.join(self._txn_stage_dir, txn_id)
-        obs = Observation(f"group-{txn_id}")
-        (
-            rows.observe(obs, F.expr("count(1) AS `rows`"))
-            .write.mode("overwrite")
-            .partitionBy("__route", *self.partition_by)
-            .parquet(stage)
-        )
-        written = int(obs.get["rows"])
-        if written != total:
-            raise RuntimeError(
-                f"grouped append integrity: wrote {written} rows, "
-                f"inference counted {total}"
-            )
-        # adopt: move each file under its table root, preserving the hive
-        # partition subpath below the __route level
-        adds: dict[str, list[dict]] = {n: [] for n in names}
-        seq = 0
-        for route_dir in sorted(os.listdir(stage)):
-            if not route_dir.startswith("__route="):
-                continue
-            tname = unquote(route_dir[len("__route=") :])
-            if tname not in adds:
-                raise RuntimeError(
-                    f"grouped append routed unknown table {tname!r}"
-                )
-            rbase = os.path.join(stage, route_dir)
-            troot = os.path.join(self.lake_root, tname)
-            for dirpath, _dirs, fnames in os.walk(rbase):
-                for fname in sorted(fnames):
-                    if not fname.endswith(".parquet"):
-                        continue
-                    src = os.path.join(dirpath, fname)
-                    rel_part = os.path.relpath(dirpath, rbase)
-                    part_dir = (
-                        troot
-                        if rel_part == "."
-                        else os.path.join(troot, rel_part)
-                    )
-                    os.makedirs(part_dir, exist_ok=True)
-                    dst = os.path.join(
-                        part_dir, f"part-{txn_id}-{seq:05d}.parquet"
-                    )
-                    seq += 1
-                    os.rename(src, dst)
-                    adds[tname].append(
-                        {
-                            "path": os.path.relpath(dst, troot),
-                            "size": os.path.getsize(dst),
-                            "stats": _collect_file_stats(dst),
-                        }
-                    )
-        import shutil
 
-        shutil.rmtree(stage, ignore_errors=True)
-        txn = MultiTableTxn(
-            self.spark, self._txn_dir, app_id="cdc", version=batch_id
-        )
-        schema_json = full_target.jsonValue()
-        for m in members:
-            txn.stage_adopted(
-                root=os.path.join(self.lake_root, m["table_name"]),
-                add=adds[m["table_name"]],
-                rows=m["n"],
-                schema=schema_json,
-                partition_by=self.partition_by,
-                app_id=f"cdc-{m['table_name']}",
-            )
-        published = txn.commit()
-        out = []
-        for m, pub in zip(members, published):
-            out.append(
-                (
-                    m["table_name"],
-                    {
-                        "rows": 0 if pub.get("skipped") else m["n"],
-                        "files": len(adds[m["table_name"]]),
-                        "version": pub.get("version"),
-                        "skipped": bool(pub.get("skipped")),
-                    },
-                    m["evolved"],
-                    0,
+        def attempt():
+            txn_id = uuid.uuid4().hex
+            stage = os.path.join(self._txn_stage_dir, txn_id)
+            frame = rows
+            if len(live) < len(members):
+                frame = frame.where(
+                    f"`__route` IN "
+                    f"({', '.join(sql_str(m['table_name']) for m in live)})"
                 )
+            obs = Observation(f"group-{txn_id}")
+            frame = frame.observe(obs, *metrics).drop("__wire")
+            schema = first["target"]
+            for pcol, expr in first["generated"]:
+                frame = frame.withColumn(pcol, F.expr(expr))
+                schema = StructType(
+                    list(schema.fields)
+                    + [StructField(pcol, frame.schema[pcol].dataType)]
+                )
+            (
+                frame.write.mode("overwrite")
+                .options(**bloom_options(list(first["bloom"])))
+                .partitionBy("__route", *self.partition_by)
+                .parquet(stage)
             )
-        return out
+            seen = obs.get
+            expected = sum(m["n"] for m in live)
+            if int(seen["rows"]) != expected:
+                raise RuntimeError(
+                    f"group append integrity: wrote {seen['rows']} rows, "
+                    f"inference counted {expected}"
+                )
+            adds: dict[str, list[dict]] = {m["table_name"]: [] for m in live}
+            for route_dir in sorted(os.listdir(stage)):
+                if not route_dir.startswith("__route="):
+                    continue
+                tname = unquote(route_dir[len("__route=") :])
+                if tname not in adds:
+                    raise RuntimeError(
+                        f"group append routed unknown table {tname!r}"
+                    )
+                adds[tname] = adopt_staged(
+                    os.path.join(stage, route_dir),
+                    os.path.join(self.lake_root, tname),
+                    txn_id,
+                )
+            shutil.rmtree(stage, ignore_errors=True)
+            txn = MultiTableTxn(
+                self.spark, self._txn_dir, app_id="cdc", version=batch_id
+            )
+            for m in live:
+                txn.stage_adopted(
+                    root=os.path.join(self.lake_root, m["table_name"]),
+                    add=adds[m["table_name"]],
+                    rows=m["n"],
+                    schema=schema.jsonValue(),
+                    partition_by=self.partition_by,
+                    app_id=f"cdc-{m['table_name']}",
+                )
+            out = {}
+            for i, (m, pub) in enumerate(zip(live, txn.commit())):
+                skipped = bool(pub.get("skipped"))
+                res = {
+                    "rows": 0 if skipped else m["n"],
+                    "files": len(adds[m["table_name"]]),
+                    "version": pub.get("version"),
+                    "skipped": skipped,
+                }
+                out[m["table_name"]] = (res, int(seen.get(f"drift{i}") or 0))
+            return out
+
+        out = self._guarded(attempt) if live else {}
+        if self.materialize_current:
+            # after the commit, and for a replayed member too: a retry that
+            # crashed between the two commits would otherwise never
+            # materialize this batch; the MERGE's own txn mark
+            # (cdc-current-<table>, batch_id) makes a re-merge a no-op
+            self._run_concurrently(
+                [
+                    lambda m=m: self._guarded(
+                        lambda: self._merge_current_state(
+                            m["table_name"],
+                            rows.where(
+                                f"`__route` = {sql_str(m['table_name'])}"
+                            ).drop("__route", "__wire"),
+                            batch_id,
+                        )
+                    )
+                    for m in members
+                ]
+            )
+        results = []
+        for m in members:
+            res, drift = (
+                (m["skipped"], 0) if m["skipped"] else out[m["table_name"]]
+            )
+            results.append((m["table_name"], res, m["evolved"], drift))
+        return results
 
     def _merge_current_state(
         self, table_name: str, rows: DataFrame, batch_id: int | None
@@ -1353,7 +1265,6 @@ class CDCIngestor:
         dump_dir: str,
         batch_id: int | None = None,
         split_size_mb: int = 64,
-        reader: str = "text",
     ) -> dict[str, "IngestStats"]:
         """Bulk-load a mongodump/mongoexport directory
         (``<dir>/<db>/<collection>.json``, one extended-JSON doc per
@@ -1362,45 +1273,25 @@ class CDCIngestor:
         tables exactly like streamed events; per-table txn app ids make
         ``batch_id`` idempotence-safe per collection.
 
-        ``reader="text"`` (default, the SC-008 throughput path): ONE
-        native ``spark.read.text`` scan over every discovered file —
-        the JVM line reader gives the same newline-aligned byte-range
-        split contract as the Python connector (``split_size_mb`` maps
-        to ``spark.sql.files.maxPartitionBytes`` for the load's
-        duration) at none of its per-row Python cost (measured 4.3x on
-        the scan), provenance (db, collection) joins in from the
-        discovery listing by file path, and ALL collections ingest as
-        one routed batch (P6), so the collections' writes overlap on
-        driver threads instead of serializing one ingest_batch per
-        collection. ``reader="python"`` keeps the
-        portable ``format("mongodump")`` DataSource, one
-        ``snapshot_load`` per collection (see cdc/mongodump.py).
+        The SC-008 throughput path: ONE native ``spark.read.text`` scan
+        over every discovered file — the JVM line reader gives the same
+        newline-aligned byte-range split contract as the
+        ``format("mongodump")`` DataSource (``split_size_mb`` maps to
+        ``spark.sql.files.maxPartitionBytes`` for the load's duration) at
+        none of its per-row Python cost (measured 4.3x on the scan),
+        provenance (db, collection) joins in from the discovery listing
+        by file path, and ALL collections ingest as one routed batch
+        (P6), so the collections' writes overlap on driver threads.
 
-        Returns per-``db.collection`` stats in both modes, each with its
-        own attributed ``dlq_rows`` (a corrupt line's collection is known
-        from file provenance even when its JSON is not parseable — r9
-        verdict #6). A ``"_dlq"`` key appears ONLY for the truly
-        unattributable residue (none, for either reader, under normal
-        operation) or a nonzero DLQ overflow."""
-        from .mongodump import _discover, register_mongodump_source
+        Returns per-``db.collection`` stats, each with its own attributed
+        ``dlq_rows`` (a corrupt line's collection is known from file
+        provenance even when its JSON is not parseable — r9 verdict #6).
+        A ``"_dlq"`` key appears ONLY for the truly unattributable
+        residue (none under normal operation) or a nonzero DLQ
+        overflow."""
+        from .mongodump import _discover
 
         files = sorted(_discover(dump_dir))
-        if reader == "python":
-            register_mongodump_source(self.spark)
-            out: dict[str, IngestStats] = {}
-            for path, db, coll in files:
-                docs = (
-                    self.spark.read.format("mongodump")
-                    .option("path", path)
-                    .option("splitSizeMb", str(split_size_mb))
-                    .load()
-                )
-                out[f"{db}.{coll}"] = self.snapshot_load(
-                    docs, db, coll, batch_id=batch_id
-                )
-            return out
-        if reader != "text":
-            raise ValueError("reader must be 'text' or 'python'")
         if not files:
             raise ValueError(f"no .json dump files under {dump_dir}")
 
@@ -1411,7 +1302,7 @@ class CDCIngestor:
         from pyspark.sql import Observation
 
         # (abs path → db, coll) provenance from the same discovery the
-        # python connector uses, joined on the DECODED _metadata.file_path.
+        # mongodump DataSource uses, joined on the DECODED _metadata.file_path.
         # Spark surfaces the path URI-encoded (`file:/a/b%20c.json` for
         # `/a/b c.json`), so the raw string only equals os.path.abspath
         # for paths free of spaces/%/non-ASCII — any other file silently
@@ -1560,7 +1451,7 @@ class CDCIngestor:
         dlq_table = self.table("_dlq")
         dlq = dlq_table.read()
         if reasons:
-            quoted = ", ".join(f"'{r}'" for r in reasons)
+            quoted = ", ".join(sql_str(r) for r in reasons)
             dlq = dlq.where(f"reason IN ({quoted})")
         start = datetime.datetime.now(datetime.timezone.utc).replace(
             tzinfo=None

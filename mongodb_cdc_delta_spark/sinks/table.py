@@ -157,6 +157,36 @@ def _collect_file_stats(path: str) -> dict | None:
         return None
 
 
+def adopt_staged(stage: str, root: str, prefix: str) -> list[dict[str, Any]]:
+    """Move every parquet file written under ``stage`` to the same hive
+    partition subpath below ``root``, renamed ``part-<prefix>-<n>.parquet``,
+    and return one add-file entry (path relative to ``root``, size, column
+    stats) per file. The files stay invisible until a commit names them."""
+    add: list[dict[str, Any]] = []
+    for dirpath, _dirs, names in os.walk(stage):
+        for name in sorted(names):
+            if not name.endswith(".parquet"):
+                continue
+            rel_part = os.path.relpath(dirpath, stage)
+            part_dir = root if rel_part == "." else os.path.join(root, rel_part)
+            os.makedirs(part_dir, exist_ok=True)
+            dst = os.path.join(part_dir, f"part-{prefix}-{len(add):05d}.parquet")
+            os.rename(os.path.join(dirpath, name), dst)
+            add.append(
+                {
+                    "path": os.path.relpath(dst, root),
+                    "size": os.path.getsize(dst),
+                    "stats": _collect_file_stats(dst),
+                }
+            )
+    return add
+
+
+def bloom_options(columns: list[str]) -> dict[str, str]:
+    """Parquet writer options enabling a bloom filter on each column."""
+    return {f"parquet.bloom.filter.enabled#{c}": "true" for c in columns}
+
+
 def _json_stat(v):
     """Footer statistic → JSON-safe comparable scalar, or None to skip."""
     import datetime as _d
@@ -696,64 +726,37 @@ class LakeTable:
         self, df: DataFrame, partition_by: list[str]
     ) -> tuple[list[dict[str, Any]], int]:
         """Write df's parquet files under a per-commit staging dir, then move
-        each part file into its hive partition dir at the table root with a
-        unique name. Returns (add-file entries, rows written) — the row
-        count rides the write via the Observation API, no second scan
-        (reference write_batch returns records_written)."""
+        them under the table root (``adopt_staged``). Returns (add-file
+        entries, rows written) — the row count rides the write via the
+        Observation API, no second scan (reference write_batch returns
+        records_written)."""
         from pyspark.sql import Observation
 
         commit_id = uuid.uuid4().hex
         stage = os.path.join(self.root, _TMP_DIR, commit_id)
         obs = Observation(f"stage-{commit_id}")
         df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        writer = df.write.mode("overwrite")
-        # table property `bloom.filter.columns`: write parquet bloom
-        # filters for the named columns. min/max stats cannot discriminate
-        # random keys (UUIDs — the CDC _id case); blooms give row-group
-        # skipping for point lookups there at ~1 byte/row cost.
-        bloom_cols = [
-            c.strip()
-            for c in self.properties()
-            .get("bloom.filter.columns", "")
-            .split(",")
-            if c.strip()
-        ]
-        for c in bloom_cols:
-            if c in df.columns:
-                writer = writer.option(
-                    f"parquet.bloom.filter.enabled#{c}", "true"
-                )
+        writer = df.write.mode("overwrite").options(
+            **bloom_options([c for c in self.bloom_columns() if c in df.columns])
+        )
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(stage)
         rows = int(obs.get["rows"])
-
-        add: list[dict[str, Any]] = []
-        n = 0
-        for dirpath, _dirs, names in os.walk(stage):
-            for name in sorted(names):
-                if not name.endswith(".parquet"):
-                    continue
-                src = os.path.join(dirpath, name)
-                rel_part = os.path.relpath(dirpath, stage)
-                part_dir = (
-                    self.root
-                    if rel_part == "."
-                    else os.path.join(self.root, rel_part)
-                )
-                os.makedirs(part_dir, exist_ok=True)
-                dst = os.path.join(part_dir, f"part-{commit_id}-{n:05d}.parquet")
-                n += 1
-                os.rename(src, dst)
-                add.append(
-                    {
-                        "path": os.path.relpath(dst, self.root),
-                        "size": os.path.getsize(dst),
-                        "stats": _collect_file_stats(dst),
-                    }
-                )
+        add = adopt_staged(stage, self.root, commit_id)
         shutil.rmtree(stage, ignore_errors=True)
         return add, rows
+
+    def bloom_columns(self) -> list[str]:
+        """Columns named by the table property ``bloom.filter.columns``:
+        their parquet files carry bloom filters. min/max stats cannot
+        discriminate random keys (UUIDs — the CDC _id case); blooms give
+        row-group skipping for point lookups there at ~1 byte/row cost."""
+        return [
+            c.strip()
+            for c in self.properties().get("bloom.filter.columns", "").split(",")
+            if c.strip()
+        ]
 
     def _publish(self, commit: CommitInfo) -> None:
         """Two-phase atomic publish: write tmp, link into place. os.link

@@ -59,7 +59,7 @@ class MultiTableTxn:
         spark: SparkSession,
         coordinator_dir: str,
         app_id: str,
-        version: int,
+        version: int | None,
     ):
         self.spark = spark
         self.dir = coordinator_dir
@@ -87,10 +87,9 @@ class MultiTableTxn:
 
         ``app_id`` overrides the txn-level app id for THIS table's commit
         marker (the CDC ingest keys idempotence per table as
-        ``cdc-<table>`` — a coalesced batch must keep those markers
-        compatible with per-table appends across restarts)."""
+        ``cdc-<table>``)."""
         app = app_id or self.app_id
-        if table.txn_version(app) >= self.version:
+        if self.version is not None and table.txn_version(app) >= self.version:
             return {"rows": 0, "files": 0, "skipped": True}
         snap = table._replay()
         partition_by = list(
@@ -134,8 +133,8 @@ class MultiTableTxn:
         app_id: str | None = None,
     ) -> None:
         """Enroll files ALREADY placed in ``root``'s directory (by a
-        caller-run grouped write job — see CDCIngestor's coalesced routed
-        append) as one pending table commit. The caller guarantees the
+        caller-run grouped write job — see CDCIngestor's routed group
+        write) as one pending table commit. The caller guarantees the
         files are invisible (no published commit references them) and
         that ``schema`` (a StructType.jsonValue dict) is the
         post-evolution table schema they were written with."""
@@ -188,6 +187,14 @@ class MultiTableTxn:
         return results
 
     def commit(self) -> list[dict[str, Any]]:
+        if self.version is None:
+            # without a version no mark could make a roll-forward
+            # idempotent, so there is no manifest: each table publishes as
+            # a plain ``append(txn=None)`` does
+            return [
+                _publish_entry(self.spark, entry, self.app_id, None)
+                for entry in self._staged
+            ]
         self.prepare()
         return self.finalize()
 
@@ -206,20 +213,24 @@ class MultiTableTxn:
 
 
 def _publish_entry(
-    spark: SparkSession, entry: dict[str, Any], app_id: str, version: int
+    spark: SparkSession,
+    entry: dict[str, Any],
+    app_id: str,
+    version: int | None,
 ) -> dict[str, Any]:
     """Idempotently publish one table's staged commit: skipped when the
     (app_id, version) mark is already in the table's log, retried with a
     fresh version number when another writer wins the optimistic race
     (data files are already in place — only the log entry re-publishes).
-    An entry-level ``app_id`` (coalesced CDC batches mark per-table
-    ``cdc-<table>`` ids) overrides the manifest-level one."""
+    An entry-level ``app_id`` (CDC batches mark per-table ``cdc-<table>``
+    ids) overrides the manifest-level one. ``version=None`` publishes
+    with no mark and no skip check."""
     from pyspark.sql.types import StructType
 
     app_id = entry.get("app_id") or app_id
     table = LakeTable(spark, entry["root"])
     while True:
-        if table.txn_version(app_id) >= version:
+        if version is not None and table.txn_version(app_id) >= version:
             return {"root": entry["root"], "skipped": True}
         snap = table._replay()
         schema = StructType.fromJson(entry["schema"])
@@ -232,7 +243,11 @@ def _publish_entry(
             add=entry["add"],
             schema=schema.jsonValue(),
             partition_by=entry["partition_by"],
-            txn={"app_id": app_id, "version": version},
+            txn=(
+                {"app_id": app_id, "version": version}
+                if version is not None
+                else None
+            ),
             metrics={"files": len(entry["add"]), "rows": entry["rows"]},
         )
         try:

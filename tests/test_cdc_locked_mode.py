@@ -192,6 +192,39 @@ class TestLockedMode:
         )
         assert stats3.type_drift_rows == {}
 
+    def test_two_table_batch_shares_one_job(self, spark, tmp_path):
+        # both tables agree on schema, so they form one group: one write
+        # job, whose observation counts each table's drift on its own
+        root = str(tmp_path / "lake")
+        boot = CDCIngestor(spark, root, mode=MergeMode.AUTO)
+        boot.ingest_batch(
+            spark.createDataFrame(
+                [_event(i, coll=c) for c in ("items", "parts") for i in range(5)],
+                "value string",
+            ),
+            batch_id=0,
+        )
+        locked = CDCIngestor(spark, root, mode=MergeMode.LOCKED)
+        groups = []
+        write_group = locked._write_group
+        locked._write_group = lambda clean, members, batch_id: (
+            groups.append([m["table_name"] for m in members])
+            or write_group(clean, members, batch_id)
+        )
+        events = (
+            [_event(i, coll="items") for i in range(5, 8)]
+            + [_event(8, coll="items", extra={"n": "drifted"})]
+            + [_event(i, coll="parts", extra={"n": f"x{i}"}) for i in range(5, 8)]
+        )
+        stats = locked.ingest_batch(
+            spark.createDataFrame(events, "value string"), batch_id=1
+        )
+        assert groups == [["d_items", "d_parts"]]
+        assert stats.type_drift_rows == {"d_items": 1, "d_parts": 3}
+        assert locked.table("d_items").count() == 9
+        assert locked.table("d_parts").count() == 8
+        assert stats.schema_evolutions == []
+
     def test_locked_parse_schema_recurses_maps(self):
         # ADVICE r6: map<_, timestamp> must parse as map<_, string> so
         # the digit-string cast rule sees the wire token

@@ -306,7 +306,7 @@ class TestDLQReplay:
         clean, dlq = parse_events(
             raw_df(spark, [ok_doc]), max_doc_bytes=50
         )
-        small_cap._guarded_append(small_cap.table("_dlq"), dlq, partition_by=[])
+        small_cap.table("_dlq").append(dlq, partition_by=[])
         assert small_cap.table("_dlq").read().count() == 1
 
         stats = small_cap.replay_dlq(batch_id=99)
@@ -327,6 +327,23 @@ class TestDLQReplay:
         dlq = ing.table("_dlq").read()
         assert dlq.count() == 1
         assert dlq.first()["reason"] == DLQReason.CORRUPTED_DATA.value
+
+    def test_reason_filter_is_quoted(self, spark, tmp_path):
+        ing = CDCIngestor(spark, str(tmp_path / "lake"))
+        _clean, dlq = parse_events(raw_df(spark, ["broken {{{"]), now=NOW)
+        for reason in ("it's stale", "other"):
+            ing.table("_dlq").append(
+                dlq.withColumn("reason", F.lit(reason)), partition_by=[]
+            )
+        # a crafted reason matches nothing, so it purges nothing
+        ing.replay_dlq(reasons=["nope') OR ('1' = '1"], batch_id=1)
+        assert ing.table("_dlq").count() == 2
+        # a reason holding a quote matches exactly its own row: replayed,
+        # it fails again (a fresh DLQ row) and only the original is purged
+        ing.replay_dlq(reasons=["it's stale"], batch_id=2)
+        assert sorted(
+            r["reason"] for r in ing.table("_dlq").read().collect()
+        ) == [DLQReason.CORRUPTED_DATA.value, "other"]
 
 
 class TestExtendedJsonExtras:
@@ -523,9 +540,9 @@ class TestAuditWriteThrough:
 
 class TestParallelCollections:
     def test_parallel_matches_serial(self, spark, tmp_path):
-        """One batch of four collections plus a poison event — four
-        per-collection writes and the DLQ append, run concurrently —
-        lands what four single-collection batches land one by one."""
+        """One batch of four collections plus a poison event — one group
+        write and the DLQ append, run concurrently — lands what four
+        single-collection batches (four groups of one) land one by one."""
         colls = ("users", "orders", "items", "carts")
         by_coll = {
             c: [
@@ -538,7 +555,7 @@ class TestParallelCollections:
         for c in colls:
             serial.ingest_batch(raw_df(spark, by_coll[c]), batch_id=0, now=NOW)
         events = [e for c in colls for e in by_coll[c]] + ["{{{not json"]
-        par = CDCIngestor(spark, str(tmp_path / "p"), coalesce_commits=False)
+        par = CDCIngestor(spark, str(tmp_path / "p"))
         p_stats = par.ingest_batch(raw_df(spark, events), batch_id=0, now=NOW)
         assert set(p_stats.collections) == {f"shop_{c}" for c in colls}
         assert p_stats.dlq_rows == 1

@@ -2,9 +2,9 @@
 threads, and every Spark job they launch carries the caller's job group
 (so a streaming query's job group, and its cancellation, reach them).
 
-Two batch shapes: per-collection writes (``coalesce_commits=False``)
-and grouped writes split into two schema groups; both carry a poison
-event, so the DLQ append is one of the concurrent writes."""
+Two batch shapes: every collection with its own schema (three groups
+of one) and two schema groups of two; both carry a poison event, so the
+DLQ append is one of the concurrent writes."""
 
 from __future__ import annotations
 
@@ -33,31 +33,32 @@ def _envelope(coll, i, extra=None):
 
 
 @pytest.mark.parametrize(
-    "coalesce, n_writes",
+    "shared, n_writes",
     [
-        # c0..c2 per collection + DLQ
+        # c0, c1 (x), c2 (y): three groups of one + DLQ
         (False, 4),
         # {c0, c1} and {c2 wide, c3 wide} as two groups + DLQ
         (True, 3),
     ],
 )
 def test_caller_job_group_tags_every_concurrent_write_job(
-    spark, tmp_path, coalesce, n_writes
+    spark, tmp_path, shared, n_writes
 ):
-    colls = ["c0", "c1", "c2"] + (["c3"] if coalesce else [])
+    colls = ["c0", "c1", "c2"] + (["c3"] if shared else [])
+    extra = {"c2": "x", "c3": "x"} if shared else {"c1": "x", "c2": "y"}
     lines = [
-        _envelope(c, i, extra={"x": i} if c in ("c2", "c3") and coalesce else None)
+        _envelope(c, i, extra={extra[c]: i} if c in extra else None)
         for c in colls
         for i in range(5)
     ] + ["{{{not json"]
     raw = spark.createDataFrame([(v,) for v in lines], "value string")
-    ing = CDCIngestor(spark, str(tmp_path / "lake"), coalesce_commits=coalesce)
+    ing = CDCIngestor(spark, str(tmp_path / "lake"))
 
     sc = spark.sparkContext
-    seen = []  # (thread ident, job group visible on that thread)
     lock = threading.Lock()
 
-    def spy(fn):
+    def spy(fn, seen):
+        # records (thread ident, job group visible on that thread)
         def wrapped(*a, **k):
             with lock:
                 seen.append(
@@ -67,10 +68,12 @@ def test_caller_job_group_tags_every_concurrent_write_job(
 
         return wrapped
 
-    # every write enters through one of these: a group's write attempt,
-    # or the guarded append under a single collection and the DLQ
-    ing._write_group = spy(ing._write_group)
-    ing._guarded_append = spy(ing._guarded_append)
+    # every write enters through one of these: a group's write task, or
+    # the DLQ append's guarded write
+    groups = []
+    ing._write_group = spy(ing._write_group, groups)
+    guarded = []
+    ing._guarded = spy(ing._guarded, guarded)
 
     tracker = sc.statusTracker()
     untagged_before = set(tracker.getJobIdsForGroup(None))
@@ -86,8 +89,11 @@ def test_caller_job_group_tags_every_concurrent_write_job(
     assert {t: r["rows"] for t, r in stats.collections.items()} == {
         f"shop_{c}": 5 for c in colls
     }
-    # the writes ran off the caller's thread, and saw its job group there
-    assert len(seen) == n_writes
+    # the writes ran off the caller's thread, and saw its job group there;
+    # each group's commit attempt and the DLQ append pass _guarded once
+    assert len(groups) == n_writes - 1
+    assert len(guarded) == n_writes
+    seen = groups + guarded
     assert threading.get_ident() not in {t for t, _ in seen}
     assert {g for _, g in seen} == {group}
     # ... and so did every Spark job they launched: none is untagged, and

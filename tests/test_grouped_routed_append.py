@@ -1,15 +1,17 @@
-"""Coalesced routed append (r9 verdict #1): a multi-collection batch is
+"""Routed group append (r9 verdict #1): every collection of a batch is
 written by ONE Spark job per same-schema collection group and published
-through ONE MultiTableTxn manifest with the normal per-table
-``cdc-<table>`` markers. These tests pin:
+through ONE MultiTableTxn commit with the normal per-table
+``cdc-<table>`` markers; a single collection is a group of one. These
+tests pin:
 
-- content parity: grouped output is identical to the per-collection path
-  (same rows, same typing, same per-collection stats shape);
+- content parity: the group write lands what ``LakeTable.append`` of the
+  same typed rows lands (same rows, same typing, same schema);
 - group splitting: a collection whose post-evolution schema disagrees
-  falls back without contaminating the shared job;
+  leaves the shared job without contaminating it;
 - exactly-once: replaying a batch_id skips every table; a crash between
   manifest and publishes rolls FORWARD at the next ingestor construction;
-- DLQ attribution still lands per collection in grouped mode.
+- DLQ attribution still lands per collection;
+- a partition layout change still fails that table's write.
 """
 
 from __future__ import annotations
@@ -59,25 +61,60 @@ def _data_rows(ing, table):
 COLLS = ["c0", "c1", "c2", "c3"]
 
 
-class TestGroupedParity:
-    def test_grouped_matches_per_collection_path(self, spark, tmp_path):
-        raw = _batch(spark, COLLS)
-        g = CDCIngestor(spark, str(tmp_path / "lake_g"), coalesce_commits=True)
-        p = CDCIngestor(
-            spark, str(tmp_path / "lake_p"), coalesce_commits=False
+def _appended_like_ingest(spark, raw, root, table):
+    """``LakeTable.append`` of one collection's typed rows: the shipped
+    single-table append, fed the projection the ingest builds."""
+    from mongodb_cdc_delta_spark.cdc.pipeline import (
+        _meta_schema,
+        _parse_events_full,
+        _typed_rows,
+        doc_schemas,
+        infer_collections,
+        millis_cast_rule,
+    )
+    from mongodb_cdc_delta_spark.sinks.table import LakeTable
+    from pyspark.sql.types import StructType
+
+    parsed, clean, _dlq = _parse_events_full(raw)
+    parsed = parsed.persist()
+    try:
+        (r,) = [
+            r
+            for r in infer_collections(parsed)
+            if f"{r['db']}_{r['collection']}" == table
+        ]
+        doc, parse = doc_schemas(r["ddl"])
+        target = StructType(list(doc.fields) + list(_meta_schema(clean).fields))
+        sub = clean.where(f"concat(db, '_', collection) = '{table}'")
+        t = LakeTable(spark, f"{root}/{table}")
+        t.append(
+            _typed_rows(sub, parse, target, millis_cast_rule),
+            partition_by=["_ingestion_date"],
         )
+    finally:
+        parsed.unpersist()
+    return t
+
+
+class TestGroupedParity:
+    def test_group_write_matches_lake_table_append(self, spark, tmp_path):
+        raw = _batch(spark, COLLS)
+        g = CDCIngestor(spark, str(tmp_path / "lake_g"))
         st_g = g.ingest_batch(raw, batch_id=1)
-        st_p = p.ingest_batch(raw, batch_id=1)
-        assert set(st_g.collections) == set(st_p.collections) == {
-            f"shop_{c}" for c in COLLS
-        }
+        assert set(st_g.collections) == {f"shop_{c}" for c in COLLS}
         for t in st_g.collections:
             assert st_g.collections[t]["rows"] == 50
-            assert st_g.collections[t]["rows"] == st_p.collections[t]["rows"]
             assert not st_g.collections[t]["skipped"]
-            assert _data_rows(g, t) == _data_rows(p, t)
-            # identical lake schema from both paths
-            assert g.table(t).schema() == p.table(t).schema()
+            ref = _appended_like_ingest(spark, raw, str(tmp_path / "lake_a"), t)
+            got = g.table(t)
+            cols = sorted(
+                c for c in ref.read().columns if c == "_id" or not c.startswith("_")
+            )
+            assert sorted(map(tuple, got.read().select(*cols).collect())) == sorted(
+                map(tuple, ref.read().select(*cols).collect())
+            )
+            # identical lake schema from both writers
+            assert got.schema() == ref.schema()
 
     def test_replay_same_batch_id_skips_everything(self, spark, tmp_path):
         ing = CDCIngestor(spark, str(tmp_path / "lake"))
@@ -88,9 +125,9 @@ class TestGroupedParity:
         for c in COLLS:
             assert ing.table(f"shop_{c}").count() == 50
 
-    def test_schema_splitter_falls_back_per_collection(self, spark, tmp_path):
+    def test_schema_splitter_forms_a_group_of_one(self, spark, tmp_path):
         """c2 carries an extra field → its inferred schema differs → it
-        must leave the shared job (singleton fallback) and still land
+        must leave the shared job (a group of one) and still land
         correctly, wider."""
         ing = CDCIngestor(spark, str(tmp_path / "lake"))
         st = ing.ingest_batch(
@@ -165,3 +202,17 @@ class TestGroupedCrashRecovery:
         assert all(v["skipped"] for v in st.collections.values())
         for c in COLLS:
             assert ing2.table(f"shop_{c}").count() == 50, c
+
+
+class TestGroupedLayout:
+    def test_layout_change_fails_that_tables_write(self, spark, tmp_path):
+        lake = str(tmp_path / "lake")
+        CDCIngestor(spark, lake).ingest_batch(
+            _batch(spark, ["c0"], n=5), batch_id=0
+        )
+        ing = CDCIngestor(spark, lake, partition_by=())
+        with pytest.raises(ValueError, match="partition layout change"):
+            ing.ingest_batch(_batch(spark, ["c0", "c1"], n=5), batch_id=1)
+        # only c0's write failed: c1 (a new table) landed in the new layout
+        assert ing.table("shop_c0").count() == 5
+        assert ing.table("shop_c1").count() == 5

@@ -2,11 +2,11 @@
 
 - Building a batch's plans costs a bounded number of driver→JVM round
   trips (py4j ``send_command`` calls), counted with no Spark action run.
-- Field names that are not plain identifiers (dots, backticks) ingest on
-  both the grouped and the per-collection path.
+- Field names that are not plain identifiers (dots, backticks) ingest in
+  a shared group and in groups of one.
 - The cast renderer relaxes ARRAY element and MAP value nullability (SQL
   type text cannot spell them non-null) and keeps everything else.
-- Grouped writes pass the circuit breaker like every other sink write.
+- Group writes pass the circuit breaker like every other sink write.
 """
 
 from __future__ import annotations
@@ -193,14 +193,15 @@ class TestRoundTripBudget:
             assert out.schema == target
 
 
-@pytest.mark.parametrize("coalesce", [True, False])
-def test_dotted_and_backticked_field_names_ingest(spark, tmp_path, coalesce):
-    # grouped (one job for both collections) and per-collection paths
+@pytest.mark.parametrize("shared", [True, False])
+def test_dotted_and_backticked_field_names_ingest(spark, tmp_path, shared):
+    # one group for both collections, or two groups of one
     doc = {"_id": "k", "a.b": 1, "we`ird": 3, "x": {"p.q": 2}}
-    lines = [_envelope(c, dict(doc, _id=c)) for c in ("c0", "c1")]
-    ing = CDCIngestor(
-        spark, str(tmp_path / "lake"), coalesce_commits=coalesce
-    )
+    lines = [
+        _envelope("c0", dict(doc, _id="c0")),
+        _envelope("c1", dict(doc, _id="c1", **({} if shared else {"y": 1}))),
+    ]
+    ing = CDCIngestor(spark, str(tmp_path / "lake"))
     stats = ing.ingest_batch(_raw(spark, lines), batch_id=0)
     assert stats.dlq_rows == 0
     for c in ("c0", "c1"):

@@ -121,6 +121,19 @@ def test_missing_path_and_empty_dir_raise(spark, tmp_path):
         MongoDumpReader({"path": str(empty)}).partitions()
 
 
+def _load_with_datasource(spark, ing, root, batch_id=1):
+    """The reference load for snapshot_load_dump: each discovered file
+    read through format("mongodump") and ingested with snapshot_load."""
+    from mongodb_cdc_delta_spark.cdc.mongodump import _discover
+
+    register_mongodump_source(spark)
+    out = {}
+    for path, db, coll in sorted(_discover(root)):
+        docs = spark.read.format("mongodump").option("path", path).load()
+        out[f"{db}.{coll}"] = ing.snapshot_load(docs, db, coll, batch_id=batch_id)
+    return out
+
+
 def test_text_and_python_readers_load_identical_tables(spark, tmp_path):
     """The native-text SC-008 path and the portable python DataSource
     path must land byte-identical table contents (same typing, same
@@ -129,8 +142,8 @@ def test_text_and_python_readers_load_identical_tables(spark, tmp_path):
     root = _mk_dump(tmp_path, n=7)
     ing_t = CDCIngestor(spark, str(tmp_path / "lake_text"))
     ing_p = CDCIngestor(spark, str(tmp_path / "lake_py"))
-    st_t = ing_t.snapshot_load_dump(root, batch_id=1, reader="text")
-    st_p = ing_p.snapshot_load_dump(root, batch_id=1, reader="python")
+    st_t = ing_t.snapshot_load_dump(root, batch_id=1)
+    st_p = _load_with_datasource(spark, ing_p, root)
     assert set(st_t) == set(st_p) == {"shop.users", "shop.orders"}
     for tbl in ("shop_users", "shop_orders"):
         # exclude per-ingest metadata (wall-clock event/ingest timestamps,
@@ -152,15 +165,12 @@ def test_text_and_python_readers_load_identical_tables(spark, tmp_path):
     assert set(st_t["shop.users"].collections) == {"shop_users"}
 
 
-def test_text_reader_rejects_unknown_reader_and_empty_dir(spark, tmp_path):
+def test_text_reader_rejects_empty_dir(spark, tmp_path):
     ing = CDCIngestor(spark, str(tmp_path / "lake"))
-    root = _mk_dump(tmp_path)
-    with pytest.raises(ValueError, match="reader"):
-        ing.snapshot_load_dump(root, reader="orc")
     empty = tmp_path / "empty"
     empty.mkdir()
     with pytest.raises(ValueError, match="no .json"):
-        ing.snapshot_load_dump(str(empty), reader="text")
+        ing.snapshot_load_dump(str(empty))
 
 
 def test_text_reader_url_encoded_paths_drop_nothing(spark, tmp_path):
@@ -177,12 +187,8 @@ def test_text_reader_url_encoded_paths_drop_nothing(spark, tmp_path):
     (root / "plain.json").write_text(json.dumps({"_id": "x", "n": 99}) + "\n")
     ing_t = CDCIngestor(spark, str(tmp_path / "lake_text"))
     ing_p = CDCIngestor(spark, str(tmp_path / "lake_py"))
-    st_t = ing_t.snapshot_load_dump(
-        str(tmp_path / "du mp+dir"), batch_id=1, reader="text"
-    )
-    st_p = ing_p.snapshot_load_dump(
-        str(tmp_path / "du mp+dir"), batch_id=1, reader="python"
-    )
+    st_t = ing_t.snapshot_load_dump(str(tmp_path / "du mp+dir"), batch_id=1)
+    st_p = _load_with_datasource(spark, ing_p, str(tmp_path / "du mp+dir"))
     assert set(st_t) == set(st_p) == {"my%db.ol' coll", "my%db.plain"}
     for ing in (ing_t, ing_p):
         assert ing.table("my%db_ol' coll").count() == 9
@@ -204,7 +210,10 @@ def test_dlq_attribution_per_collection_both_readers(spark, tmp_path):
         (d / f"{coll}.json").write_text("\n".join(lines) + "\n")
     for reader, lake in (("text", "lake_t"), ("python", "lake_p")):
         ing = CDCIngestor(spark, str(tmp_path / lake))
-        st = ing.snapshot_load_dump(str(root), batch_id=1, reader=reader)
+        if reader == "text":
+            st = ing.snapshot_load_dump(str(root), batch_id=1)
+        else:
+            st = _load_with_datasource(spark, ing, str(root))
         assert set(st) == {"shop.users", "shop.orders"}, reader
         for coll in ("users", "orders"):
             assert st[f"shop.{coll}"].dlq_rows == 1, (reader, coll)

@@ -89,8 +89,6 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--mb", default="128,640")
     ap.add_argument("--splits", default="16,64")
-    ap.add_argument("--readers", default="text,python",
-                    help="snapshot_load_dump reader modes to sweep")
     ap.add_argument("--collections", type=int, default=2)
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
@@ -104,18 +102,15 @@ def main() -> int:
     spark = get_spark(app_name="snapshot-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warm-up: a 2 MB dump through the full path once per reader, so the
-    # first timed run doesn't absorb JVM/codegen/Arrow-worker cold costs
+    # warm-up: a 2 MB dump through the full path once, so the first
+    # timed run doesn't absorb JVM/codegen cold costs
     warm_dump = tempfile.mkdtemp(prefix="snapwarm-")
     make_dump(warm_dump, 2, args.collections)
-    for reader in args.readers.split(","):
-        lake = tempfile.mkdtemp(prefix="snapwarmlake-")
-        try:
-            CDCIngestor(spark, lake).snapshot_load_dump(
-                warm_dump, batch_id=1, reader=reader
-            )
-        finally:
-            shutil.rmtree(lake, ignore_errors=True)
+    lake = tempfile.mkdtemp(prefix="snapwarmlake-")
+    try:
+        CDCIngestor(spark, lake).snapshot_load_dump(warm_dump, batch_id=1)
+    finally:
+        shutil.rmtree(lake, ignore_errors=True)
     shutil.rmtree(warm_dump, ignore_errors=True)
 
     runs = []
@@ -125,48 +120,43 @@ def main() -> int:
         nbytes, ndocs = make_dump(dump, mb, args.collections)
         gen_s = round(time.time() - t0, 1)
         for split_mb in [int(x) for x in args.splits.split(",")]:
-            for reader in args.readers.split(","):
-                lake = tempfile.mkdtemp(prefix="snaplake-")
-                try:
-                    ing = CDCIngestor(spark, lake)
-                    t0 = time.time()
-                    stats = ing.snapshot_load_dump(
-                        dump,
-                        batch_id=1,
-                        split_size_mb=split_mb,
-                        reader=reader,
-                    )
-                    wall = time.time() - t0
-                    rows = sum(
-                        c.get("rows", 0)
-                        for s in stats.values()
-                        for c in s.collections.values()
-                    )
-                    mbps = nbytes / 1024 / 1024 / wall
-                    runs.append(
-                        {
-                            "dump_mb": round(nbytes / 1024 / 1024, 1),
-                            "docs": ndocs,
-                            "rows_written": rows,
-                            "collections": args.collections,
-                            "reader": reader,
-                            "split_mb": split_mb,
-                            "n_splits": -(
-                                -nbytes // (split_mb * 1024 * 1024)
-                            ),
-                            "gen_s": gen_s,
-                            "wall_s": round(wall, 1),
-                            "mb_per_s": round(mbps, 1),
-                            "events_per_s": round(rows / wall),
-                            "tb_hours_extrapolated": round(
-                                1024 * 1024 / mbps / 3600, 1
-                            ),
-                            "ok": rows == ndocs,
-                        }
-                    )
-                    print(json.dumps(runs[-1]), flush=True)
-                finally:
-                    shutil.rmtree(lake, ignore_errors=True)
+            lake = tempfile.mkdtemp(prefix="snaplake-")
+            try:
+                ing = CDCIngestor(spark, lake)
+                t0 = time.time()
+                stats = ing.snapshot_load_dump(
+                    dump, batch_id=1, split_size_mb=split_mb
+                )
+                wall = time.time() - t0
+                rows = sum(
+                    c.get("rows", 0)
+                    for s in stats.values()
+                    for c in s.collections.values()
+                )
+                mbps = nbytes / 1024 / 1024 / wall
+                runs.append(
+                    {
+                        "dump_mb": round(nbytes / 1024 / 1024, 1),
+                        "docs": ndocs,
+                        "rows_written": rows,
+                        "collections": args.collections,
+                        "split_mb": split_mb,
+                        "n_splits": -(
+                            -nbytes // (split_mb * 1024 * 1024)
+                        ),
+                        "gen_s": gen_s,
+                        "wall_s": round(wall, 1),
+                        "mb_per_s": round(mbps, 1),
+                        "events_per_s": round(rows / wall),
+                        "tb_hours_extrapolated": round(
+                            1024 * 1024 / mbps / 3600, 1
+                        ),
+                        "ok": rows == ndocs,
+                    }
+                )
+                print(json.dumps(runs[-1]), flush=True)
+            finally:
+                shutil.rmtree(lake, ignore_errors=True)
         shutil.rmtree(dump, ignore_errors=True)
     payload = {
         "metric": "snapshot_load_mb_per_s",
